@@ -18,7 +18,10 @@ Design: data files are immutable Parquet written by Spark executors;
 a snapshot is a JSON manifest listing the file set (driver-side
 metadata, exactly as Iceberg's manifests are). Commits are atomic via
 rename of a CURRENT pointer. All data-plane work is DataFrame ops —
-the driver never touches row data.
+the driver never touches row data. Frames built from driver-side rows
+(metadata tables, SHOW/DESCRIBE/CALL results, ingest side inputs) go
+through ``local.local_frame``, which hands them to the JVM as an Arrow
+LocalRelation, so acting on them never starts a Python-worker job.
 """
 
 from .table import Table, Snapshot  # noqa: F401

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, word_shingles, words
 from ..functions.vector import cosine_sim
+from ..lakehouse.local import local_frame
 
 # MinHash parameters (shared with the SQL oracles): K signatures in
 # B bands of R rows; universal-hash constants (a*j + b) mod P.
@@ -1610,8 +1611,8 @@ def pagerank_pairs(
     # bounded node set, once per call — not per iteration.
     n_nodes = nodes.count()  # scalar for the teleport term (driver int)
     if n_nodes == 0:
-        return pairs.sparkSession.createDataFrame(
-            [], "node long, pr_nano long, degree long"
+        return local_frame(
+            pairs.sparkSession, [], "node long, pr_nano long, degree long"
         )
     deg = edges.groupBy("src").agg(F.count("*").alias("degree"))
     # all-integer scalars and damping (damping expressed in percent)
@@ -2374,8 +2375,9 @@ def phash_hamming_pairs(
     # synth+decode+aHash mapInPandas chain — re-executed per subtree
     # without this (the semantic_dedup scored-frame precedent). Five
     # small ints per image, deterministic, so re-reads are
-    # bit-identical and cannot move a value.
-    bands = bands.persist()
+    # bit-identical and cannot move a value. The local projection is
+    # what gets cached, never the caller's frame.
+    bands = bands.select("doc_id", *[f"b{i}" for i in range(4)]).persist()
     melted = bands.select(
         "doc_id",
         F.explode(

@@ -34,6 +34,7 @@ from ..functions.vector import (
     norm_expr,
     to_double_array,
 )
+from ..lakehouse.local import local_frame
 
 N_PLANES = 8
 
@@ -604,6 +605,10 @@ def cosine_topk_lsh(
 # "Product Quantization for Nearest Neighbor Search")
 # ---------------------------------------------------------------------------
 
+# pq_train_encode's min_by key: distance-major, code-minor
+_PQ_CODE_RADIX = 131072
+
+
 def _fold_dot(a, b):
     """Strict left-to-right dot fold over two equal-length arrays."""
     return F.aggregate(
@@ -642,7 +647,16 @@ def pq_train_encode(
     subspace, code))``. Every stage is a broadcast-codebook map or a
     (subspace, code, dim)-cell aggregation — nothing shuffles whole
     vectors to one task.
+
+    Raises ``ValueError`` when ``k_sub >= 131072``: the final
+    assignment orders candidates by ``d6 * 131072 + code``, which
+    would silently mix distance and code for larger codebooks.
     """
+    if k_sub >= _PQ_CODE_RADIX:
+        raise ValueError(
+            f"k_sub={k_sub} must be < {_PQ_CODE_RADIX}: the min_by "
+            "encoding d6 * 131072 + code needs every code below 131072"
+        )
     sub_dim = dim // n_subspaces
     subs = corpus.select(
         F.col(id_col).alias("vec_id"),
@@ -732,7 +746,7 @@ def pq_train_encode(
         "_d", F.round(l2sq_expr("sv", "cv", sub_dim), 6)
     )
     enc = (
-        F.round(F.col("_d") * 1e6).cast("long") * F.lit(131072)
+        F.round(F.col("_d") * 1e6).cast("long") * F.lit(_PQ_CODE_RADIX)
         + F.col("code")
     )
     codes = j.groupBy("vec_id", "subspace").agg(
@@ -1691,8 +1705,8 @@ def pca_basis(
             (c, d, float(round(v[d], 6))) for d in range(dim)
         )
     spark = df.sparkSession
-    comp = spark.createDataFrame(
-        rows, "component int, dim_idx int, weight double"
+    comp = local_frame(
+        spark, rows, "component int, dim_idx int, weight double"
     )
     return comp, explained
 

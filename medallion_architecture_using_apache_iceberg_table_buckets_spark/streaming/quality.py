@@ -4,7 +4,8 @@ lakehouse metrics table — the continuous form of
 ``operators/quality.py`` (what Delta Live Tables calls expectations).
 
 Per batch the row predicates still fuse into ONE aggregation over the
-micro-batch (adding checks never adds per-batch scans), and the
+micro-batch (adding checks never adds per-batch scans; the batch row
+count is an observed metric of that same action), and the
 metrics append is a handful of rows — the monitor's cost is O(batch
 bytes) however many checks are declared. ``fail_on`` turns a named
 check into a hard expectation: a violating batch raises inside
@@ -18,11 +19,12 @@ from __future__ import annotations
 from pathlib import Path
 from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lakehouse import Catalog
+from ..lakehouse.local import local_frame
 from ..operators.quality import constraint_report, row_violations
 
 METRICS_SCHEMA = T.StructType(
@@ -66,13 +68,18 @@ def monitor_stream(
         raise ValueError(f"fail_on names unknown checks: {sorted(unknown)}")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        n_rows = batch_df.count()
-        rep = constraint_report([row_violations(batch_df, dict(checks))])
+        # the row count is observed during the checks' aggregation:
+        # one action per batch, not a separate count() job
+        seen = Observation()
+        observed = batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
+        rep = constraint_report([row_violations(observed, dict(checks))])
+        reported = rep.collect()
+        n_rows = seen.get["n"]
         rows = [
             (batch_id, r["check"], r["kind"], n_rows, r["n_violations"], r["ok"])
-            for r in rep.collect()
+            for r in reported
         ]
-        metrics = spark.createDataFrame(rows, METRICS_SCHEMA)
+        metrics = local_frame(spark, rows, METRICS_SCHEMA)
         if not catalog.table_exists(namespace, metrics_table):
             catalog.create_table(namespace, metrics_table, METRICS_SCHEMA)
         catalog.table(namespace, metrics_table).append(metrics)

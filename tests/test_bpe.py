@@ -66,6 +66,19 @@ def test_matches_textbook_reference(spark):
     assert got == _reference_bpe(TEXTS, 8)
 
 
+def test_matches_reference_past_checkpoint_round(spark):
+    """num_merges > 16 runs bpe_learn's every-16-rounds
+    localCheckpoint branch; the merges still match the reference."""
+    ref = _reference_bpe(TEXTS, 20)
+    assert len(ref) == 20
+    got = [
+        (r["rank"], r["left"], r["right"], r["merged"], r["pair_count"])
+        for r in bpe_learn(spark, _docs(spark, TEXTS), num_merges=20)
+        .orderBy("rank").collect()
+    ]
+    assert got == ref
+
+
 def test_overlapping_runs_merge_left_to_right(spark):
     # 'aaaa' -> pairs (a,a) x3; merging (a,a) must give [aa, aa],
     # not [aa, a, a] or a double-merge

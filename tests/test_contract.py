@@ -18,6 +18,30 @@ def test_query_count_floor():
     assert len(entry.queries()) >= 100
 
 
+def test_driver_rows_go_through_local_frame():
+    """Package code builds frames from driver-side rows only through
+    lakehouse.local.local_frame (an Arrow LocalRelation).
+    createDataFrame on a Python list parallelizes pickled rows, and
+    every action on that frame runs a Python-worker job."""
+    import ast
+    from pathlib import Path
+
+    import medallion_architecture_using_apache_iceberg_table_buckets_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    helper = root / "lakehouse" / "local.py"
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path != helper
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
+    assert offenders == [], f"use local_frame instead: {offenders}"
+
+
 def test_sorted_compaction_clusters(spark, tmp_path):
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
 

@@ -3426,6 +3426,22 @@ def test_segment_ttr_planted(spark):
     assert got[2]["ttr_ppm"] == 500000
 
 
+def test_phash_hamming_pairs_leaves_caller_frame_uncached(spark):
+    """The pair finder caches its own projection of the band table,
+    never the caller's frame."""
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.operators import (
+        dedup as DD,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 0x0000, 0, 0, 0), (2, 0x0003, 0, 0, 0), (3, 0xFFFF, 7, 0, 0)],
+        "doc_id long, b0 int, b1 int, b2 int, b3 int",
+    )
+    pairs = DD.phash_hamming_pairs(df, max_hamming=3)
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2, 2)]
+    assert not df.is_cached
+
+
 def test_phash_components_transitive_chain(spark):
     """A-B and B-C within radius 3 but A-C outside it: components
     must still close the chain into one group labeled min(id)."""

@@ -1,5 +1,6 @@
 """Product quantization (operators/similarity.py PQ half)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.operators.similarity import (
@@ -277,3 +278,10 @@ def test_sq8_zero_vector_deterministic(spark):
         assert r["approx_cos"] is not None
         if r["neighbor_id"] == 0:
             assert r["approx_cos"] == 0.0
+
+
+def test_k_sub_beyond_code_radix_is_refused(spark):
+    # the final assignment orders by d6 * 131072 + code; a code of
+    # 131072 or more would overlap the next distance step
+    with pytest.raises(ValueError, match="k_sub=131072"):
+        pq_train_encode(_emb(spark), k_sub=131072)

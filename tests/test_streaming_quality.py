@@ -72,6 +72,12 @@ def test_metrics_accumulate_per_batch(spark, tmp_path):
     for (_, check), r in rows.items():
         by_check[check] = by_check.get(check, 0) + r["n_violations"]
     assert by_check == {"amount_not_null": 1, "amount_nonnegative": 1}
+    # n_rows is the batch's row count, the same on each check's row
+    n_rows = {bid: r["n_rows"] for (bid, _), r in rows.items()}
+    assert sorted(n_rows.values()) == [1, 2]
+    assert all(
+        r["n_rows"] == n_rows[bid] for (bid, _), r in rows.items()
+    )
 
 
 def test_fail_on_blocks_sink_but_records_metrics(spark, tmp_path):

@@ -119,3 +119,68 @@ def test_wordpiece_learn_single_corpus_pass(spark):
     assert [tuple(r) for r in merges.collect()] == [
         tuple(r) for r in ref.collect()
     ]
+
+
+def _reference_wordpiece(texts, num_merges):
+    """Pure-Python WordPiece induction: ##-continuation seed symbols
+    (words over 16 chars dropped), score cnt / (u_l * u_r) in doubles,
+    ties by pair text, each merge applied left to right."""
+    import collections
+    import re
+
+    wf = collections.Counter()
+    for t in texts:
+        for w in re.findall(r"[a-z]+", t.lower()):
+            if len(w) <= 16:
+                wf[tuple([w[0]] + ["##" + ch for ch in w[1:]])] += 1
+    merges = []
+    for rank in range(1, num_merges + 1):
+        pairs, uni = collections.Counter(), collections.Counter()
+        for syms, c in wf.items():
+            for s in syms:
+                uni[s] += c
+            for a, b in zip(syms, syms[1:]):
+                pairs[(a, b)] += c
+        if not pairs:
+            break
+        (a, b), cnt = min(
+            pairs.items(),
+            key=lambda kv: (
+                -(float(kv[1]) / (float(uni[kv[0][0]]) * float(uni[kv[0][1]]))),
+                kv[0],
+            ),
+        )
+        merged = a + b[2:]
+        merges.append((rank, a, b, merged, cnt, uni[a], uni[b]))
+        new_wf = collections.Counter()
+        for syms, c in wf.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                    out.append(merged)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            new_wf[tuple(out)] += c
+        wf = new_wf
+    return merges
+
+
+def test_wordpiece_learn_matches_reference_past_checkpoint_round(spark):
+    """num_merges > 16 runs wordpiece_learn's every-16-rounds
+    localCheckpoint branch; the merges still match the reference."""
+    texts = [
+        "the cat sat on the mat",
+        "the bat and the rat chat",
+        "that hat is flat, the cat agrees",
+        "low lower lowest newer newest wider widest",
+        "banana bandana band ban",
+    ]
+    ref = _reference_wordpiece(texts, 20)
+    assert len(ref) == 20
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    merges, _ = wordpiece_learn(spark, df, num_merges=20)
+    assert [tuple(r) for r in merges.orderBy("rank").collect()] == ref

@@ -370,8 +370,8 @@ def llm_queries_section():
         "metadata_agg_pushdown": (
             L.metadata_agg_pushdown,
             "Aggregate pushdown: the plan aggregates a "
-            "createDataFrame manifest frame (one row per live data "
-            "file) — no parquet scan node anywhere; WHERE and "
+            "driver-built LocalRelation manifest frame (one row per "
+            "live data file) — no parquet scan node anywhere; WHERE and "
             "GROUP BY evaluate on file-constant typed columns, so "
             "the whole query is O(#files) regardless of table "
             "bytes.",
@@ -418,7 +418,7 @@ def llm_queries_section():
         "metadata_ndv_sketch": (
             L.metadata_ndv_sketch,
             "Puffin-twin NDV: the estimate aggregates a "
-            "createDataFrame frame of per-file HLL register blobs "
+            "driver-built LocalRelation of per-file HLL register blobs "
             "(one row per live file) through hll_union_agg — zero "
             "data IO at query time; the sketches were recorded at "
             "write time from the just-written files.",
